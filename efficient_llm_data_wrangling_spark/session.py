@@ -16,6 +16,50 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
+_MIB = 1024**2
+_GIB = 1024**3
+#: Ceiling and floor of the default driver heap; the floor is Spark's own default.
+_MAX_DRIVER_HEAP = 12 * _GIB
+_MIN_DRIVER_HEAP = 1 * _GIB
+#: cgroup v2, then v1: the memory limit a container runs under.
+_CGROUP_MEMORY_LIMIT_FILES = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def _cgroup_memory_limit() -> int | None:
+    """Bytes of this process's cgroup memory limit, or None if unlimited/unreadable."""
+    for path in _CGROUP_MEMORY_LIMIT_FILES:
+        try:
+            text = Path(path).read_text().strip()
+        except OSError:
+            continue
+        if text.isdigit():
+            return int(text)
+    return None
+
+
+def default_driver_memory() -> str:
+    """Default ``spark.driver.memory``: half the memory this process may
+    use, clamped to [1 GiB, 12 GiB].
+
+    The memory is physical RAM, or the cgroup limit where that is lower
+    (inside a container ``SC_PHYS_PAGES`` reports the host's RAM). Falls
+    back to ``12g`` where physical memory cannot be read.
+    """
+    try:
+        physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "12g"
+    if physical <= 0:
+        return "12g"
+    limit = _cgroup_memory_limit()
+    budget = min(physical, limit) if limit else physical
+    heap = max(_MIN_DRIVER_HEAP, min(_MAX_DRIVER_HEAP, budget // 2))
+    return f"{heap // _GIB}g" if heap % _GIB == 0 else f"{heap // _MIB}m"
+
+
 #: Confs that must be set before the session starts.
 STARTUP_CONFS: dict[str, str] = {
     # Local mode runs driver and executors in ONE JVM whose default
@@ -23,9 +67,15 @@ STARTUP_CONFS: dict[str, str] = {
     # accumulates checkpoint blocks + broadcast builds well past that
     # (three independent OOMs traced to it in the r12 second session:
     # the full-suite cascade, the sweep's unigram plan, and
-    # skipgram's bench broadcast). 12 GiB is <10% of the 128 GiB test
-    # host; a real cluster deployment overrides this per-node.
-    "spark.driver.memory": "12g",
+    # skipgram's bench broadcast). The heap is min(12 GiB, half of the
+    # host's memory), never below 1 GiB: the other half holds what
+    # sits beside the heap, measured over a full test-suite run — the
+    # JVM's resident size exceeds -Xmx by ~1.3 GiB, the pytest driver
+    # process reaches 2.9 GB, and each local[8] pandas-UDF worker takes
+    # ~66 MB. A fixed 12 GiB on a 15.7 GiB host let the JVM reach
+    # 13.9 GB and the kernel's OOM killer end it mid-suite. Hosts with
+    # >= 24 GiB keep 12 GiB; get_spark(extra_conf=...) overrides it.
+    "spark.driver.memory": default_driver_memory(),
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
